@@ -27,14 +27,6 @@ def summary_stats(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def group_agg(
-    df: DataFrame, keys: list[str], aggs: list[Column]
-) -> DataFrame:
-    """Hash aggregate with map-side partial aggregation (one shuffle on
-    the group keys; Catalyst plans partial+final automatically)."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def distinct_count(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(*cols).distinct()
 
@@ -49,10 +41,6 @@ def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05) -> DataFrame:
 
 def rollup_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
     return df.rollup(*keys).agg(*aggs)
-
-
-def cube_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
-    return df.cube(*keys).agg(*aggs)
 
 
 def data_quality_audit(

@@ -19,8 +19,9 @@ Scale posture: per iteration ONE shuffle (the contribution aggregate —
 the rank⋈edges join reuses the aggregate's hash partitioning on the
 key at runtime). ``persist_every`` truncates lineage so a 50-iteration
 run doesn't build a 150-operator plan: at 100 TB you persist (or
-checkpoint) every few iterations and unpersist the previous snapshot —
-the loop stays driver-side, the data never does.
+checkpoint) every few iterations, and the ContextCleaner frees each
+previous snapshot once it is unreferenced — the loop stays driver-side,
+the data never does.
 """
 
 from __future__ import annotations
@@ -61,7 +62,6 @@ def pagerank(
     links = e.join(out_deg, "src")  # (src, dst, deg)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    persisted: DataFrame | None = None
     for i in range(iterations):
         contribs = (
             links.join(ranks, links["src"] == ranks["node"])
@@ -89,13 +89,10 @@ def pagerank(
             # not critical). The checkpoint truncates the plan to a
             # scan of the materialized partitions — plan depth stays
             # CONSTANT across iterations (pinned in tests/test_graph).
-            nxt = ranks.localCheckpoint()  # eager: materializes now
-            if persisted is not None:
-                # previous snapshot's blocks are no longer referenced
-                # by any live plan (nxt is fully materialized)
-                persisted.unpersist()
-            persisted = nxt
-            ranks = nxt
+            # The ContextCleaner frees the previous snapshot's blocks
+            # once it is unreferenced; DataFrame.unpersist() would free
+            # nothing of a checkpointed RDD.
+            ranks = ranks.localCheckpoint()  # eager: materializes now
     # `nodes` and the final snapshot stay cached: the returned lineage
     # references both, and unpersisting them here embeds the FULL
     # unfolded iteration tree in the result's cached-plan

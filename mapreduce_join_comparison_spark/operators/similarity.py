@@ -460,14 +460,22 @@ def train_ivf_centroids(
     sample. The sample (≤ sample_rows regardless of corpus size) and
     Lloyd iterations run driver-side in numpy — the one deliberate
     driver-side computation in this module, justified because its input
-    is O(sample), never O(corpus)."""
-    # no corpus.count() sizing pass: a fixed-fraction sample feeds an
-    # incremental limit (CollectLimit launches partitions in waves), so
-    # the one action reads only as much of the corpus as the limit
-    # needs — a pre-count would cost a wasted full scan at 100 TB
+    is O(sample), never O(corpus).
+
+    The sample is the ``sample_rows`` vectors with the smallest seeded
+    hash, collected in (hash, vector) order, so the centroids depend on
+    the corpus and ``seed`` only — never on partition layout or core
+    count — and a corpus of at most ``sample_rows`` vectors is used
+    whole."""
+    # bottom-k by hash, not sample().limit(): Bernoulli sampling draws
+    # per partition and a plain limit keeps the leading partitions'
+    # rows. The ordered limit is one narrow scan keeping ≤ sample_rows
+    # rows per partition plus a driver-side merge — no shuffle, and no
+    # count() sizing pass
+    h = F.xxhash64(F.col(vec_col), F.lit(seed))
     sample = (
         corpus.select(vec_col)
-        .sample(fraction=0.5, seed=seed)
+        .orderBy(h, F.col(vec_col))
         .limit(sample_rows)
         .collect()
     )

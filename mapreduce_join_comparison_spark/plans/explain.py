@@ -35,12 +35,6 @@ def assert_physical_contains(df: DataFrame, fragment: str) -> None:
         raise AssertionError(f"expected {fragment!r} in physical plan:\n{plan}")
 
 
-def assert_physical_not_contains(df: DataFrame, fragment: str) -> None:
-    plan = physical_plan(df)
-    if fragment in plan:
-        raise AssertionError(f"did not expect {fragment!r} in physical plan:\n{plan}")
-
-
 _SHUFFLE_MARKERS = (
     "Exchange hashpartitioning",
     "Exchange rangepartitioning",

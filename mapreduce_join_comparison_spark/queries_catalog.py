@@ -7,7 +7,11 @@ produce identical (row-count, schema-names, values) results at sf0.01 —
 alias every computed column the same on both sides.
 
 Registration is decorator-based so operator modules can self-register;
-this module imports them all at the bottom.
+this module imports them all at the bottom. ``QUERIES`` and ``ORACLES``
+iterate in registration order: this module's keys in source order, then
+``tpch_queries``, then ``pipeline``. Importing ``pipeline`` first gives
+the same order: its registrations wait on the circular import of this
+module, so they still land last.
 """
 
 from __future__ import annotations
@@ -21,12 +25,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-# set once _reorder_for_driver has run; late registrations (a module
-# that imports `pipeline` FIRST makes its self-registrations land
-# AFTER the catalog body via the circular import) re-apply the order
-_REORDERED = False
-
-
 def register(name: str, oracle: str | None = None):
     """Register a query; ``oracle=None`` → rows-only check (for
     non-SQL-expressible ops like generators / streaming)."""
@@ -35,8 +33,6 @@ def register(name: str, oracle: str | None = None):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        if _REORDERED:
-            _reorder_for_driver()
         return fn
 
     return deco
@@ -7806,61 +7802,9 @@ def sample_temperature_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Adapted TPC-H suite (Q3–Q22) — registers on import; see tpch_queries.py.
+# Self-registering modules: the adapted TPC-H suite (Q3–Q22, see
+# tpch_queries.py) and the data-pipeline queries (pipeline.py).
 # --------------------------------------------------------------------------
 
 from . import tpch_queries  # noqa: E402,F401  (self-registering)
-
-# --------------------------------------------------------------------------
-# Driver-check ordering. The driver verifies queries in registration
-# order under a ~50-query/round cap, so ordering decides which queries
-# earn a fresh hard CORRECTNESS row this round. The order is DERIVED,
-# not hand-maintained: plans/fingerprint.py hashes each query's source
-# closure (its function, same-module helpers, oracle SQL, and every
-# package module it transitively imports) and compares against
-# FINGERPRINTS.json — the fingerprint each key had at its latest
-# driver-green round (rebuilt by tools/update_fingerprints.py from the
-# CORRECTNESS_r*.json history at each round's graded commit). Policy:
-#
-#   1. never driver-green           (new queries)        -> first
-#   2. source changed since green   (stale hard signal)  -> oldest
-#      last-green round first
-#   3. unchanged greens             (rotation)           -> oldest
-#      last-green round first
-#
-# Coverage accumulates across rounds; the local oracle-parity pytest
-# replica still checks ALL queries every run regardless of order.
-# --------------------------------------------------------------------------
-
-_DRIVER_PRIORITY: list[str] = []
-
-
-def _derive_driver_priority() -> list[str]:
-    try:
-        from .plans.fingerprint import derive_priority
-
-        return derive_priority(QUERIES, ORACLES)
-    except Exception:
-        # never let a fingerprinting surprise break the driver import —
-        # plain registration order is a safe fallback
-        return []
-
-
-def _reorder_for_driver() -> None:
-    """Rebuild the registries in driver-check priority order, in place
-    (in place so references imported via ``from ... import QUERIES``
-    keep observing the reordered dicts)."""
-    global _REORDERED, _DRIVER_PRIORITY
-    _REORDERED = True
-    _DRIVER_PRIORITY = _derive_driver_priority()
-    for reg in (QUERIES, ORACLES):
-        pri = [k for k in _DRIVER_PRIORITY if k in reg]
-        ordered = pri + [k for k in reg if k not in set(pri)]
-        snapshot = dict(reg)
-        reg.clear()
-        reg.update({k: snapshot[k] for k in ordered})
-
-
 from . import pipeline  # noqa: E402,F401  (self-registering)
-
-_reorder_for_driver()  # must run AFTER every self-registering import

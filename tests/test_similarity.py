@@ -113,6 +113,20 @@ def test_ivf_topk_recall_and_determinism(spark, embeddings, numpy_corpus):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, again.collect()))
 
 
+def test_ivf_centroids_ignore_partition_layout(embeddings):
+    """The training sample is chosen by a per-row hash, so the same
+    corpus in 1, 4 or 7 partitions trains identical centroids — both
+    when the sample cuts the corpus and when it takes it whole."""
+    n = embeddings.count()
+    for sample_rows in (n // 3, n):
+        cents = [
+            train_ivf_centroids(embeddings.repartition(p), dim=64, n_cells=8,
+                                sample_rows=sample_rows, seed=42)
+            for p in (1, 4, 7)
+        ]
+        assert cents[0] == cents[1] == cents[2], sample_rows
+
+
 def test_ivf_scores_are_exact_cosines(spark, embeddings):
     queries = embeddings.filter("vec_id = 3").selectExpr(
         "vec_id AS query_id", "embedding"
